@@ -1,13 +1,7 @@
-"""LLM-ops wave 11 (promoted into the driver contract in round 7): market-data
+"""LLM-ops wave 11: market-data
 candles, behavioral streaks, embedding-truncation audits, graph
 components, session depth, and operational SLA percentiles — the
 seventh ring of curation/analytics machinery around waves 1-10.
-
-Staged during round 6 (driver-budget protocol — see
-plans/llm_ops7.py's docstring); promoted into registry._QUERY_MODULES
-in round 7 alongside waves 8-10 (43 tier-1 entries fit the ~50-entry
-attestation budget). Value-checked by tools/check_correctness.py and
-tests/test_staged_wave11.py.
 
 Output-hardening doctrine (as waves 6-10): BIGINT-cast integer
 aggregates, exact integer-rank selection instead of interpolated
@@ -322,10 +316,13 @@ def q250_connected_components_minlabel(spark: SparkSession, sf_dir: str) -> Data
     # l1(u) = LEAST(u, MIN(neighbors)) is ONE aggregate — no label
     # join, no separate node-list distinct (l1 IS the node list)
     # r15: lbl1 is NOT checkpointed any more — it is one aggregate off
-    # the sym checkpoint, its subtree appears in both round-2 branches
-    # of the one final plan (ReuseExchange shares the shuffle), and the
-    # degraded mode still stops at sym. The eager barrier cost more
-    # than the aggregate: interleaved A/B clean-rep minimums 1.617 s
+    # the sym checkpoint, inlined into both round-2 branches of the one
+    # final plan, and the degraded mode still stops at sym. The two
+    # copies are NOT shared: column pruning turns the union branch into
+    # a node-distinct aggregate, so the executed final plan
+    # (plans/r15/q250_…_after.txt) shuffles sym twice and holds no
+    # ReusedExchange. The eager barrier still cost more than that extra
+    # small shuffle: interleaved A/B clean-rep minimums 1.617 s
     # (checkpoint) vs 1.437 s (plain) vs 1.682 s (persist) at
     # sf0.1/32 cores.
     lbl1 = sym.groupBy(F.col("d").alias("node")).agg(

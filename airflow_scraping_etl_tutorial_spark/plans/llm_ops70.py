@@ -1,4 +1,4 @@
-"""LLM-ops wave 71 (STAGED round 13 for round-14 promotion): six
+"""LLM-ops wave 71: six
 engine surfaces a fresh 0-hit grep of the 456-entry catalog confirmed
 uncovered —
 

@@ -1,4 +1,4 @@
-"""LLM-ops wave 72 (STAGED round 14 for round-15 promotion): six
+"""LLM-ops wave 72: six
 engine surfaces a fresh 0-hit grep of the 462-entry catalog confirmed
 uncovered —
 

@@ -1,12 +1,7 @@
-"""LLM-ops wave 9 (promoted into the driver contract in round 7): exact-recall
+"""LLM-ops wave 9: exact-recall
 set-similarity joins, integer-arithmetic graph centrality, optimizer
 planning audits, physical-layout planning, and forensic value
 distributions — the fifth ring of curation machinery around waves 1-8.
-
-Staged during round 6 (driver-budget protocol — see
-plans/llm_ops7.py's docstring); promoted into registry._QUERY_MODULES
-in round 7. Value-checked by tools/check_correctness.py and
-tests/test_staged_wave9.py.
 
 Output-hardening doctrine (as waves 6-8): BIGINT-cast integer
 aggregates, single-division rounded ratios, truncating integer
@@ -260,7 +255,8 @@ def q226_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every iteration (the q250 fusion doctrine, round 9). r15: e_deg is
     # NOT checkpointed any more — its subtree hangs off the pairs
     # checkpoint, so both iteration consumers share its shuffles via
-    # ReuseExchange inside the one final plan, and the degraded mode
+    # ReuseExchange inside the one final plan (2 ReusedExchange nodes in
+    # plans/r15/q226_…_after.txt), and the degraded mode
     # stays linear (recompute stops at the pairs checkpoint). The eager
     # barrier cost more than the derivation: interleaved A/B clean-rep
     # minimums 1.494 s (checkpoint) vs 1.342 s (plain) vs 1.563 s

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import importlib
 import os
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -26,111 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
-
-# Modules that register queries on import (order = SURVEY.md §2 order).
-_QUERY_MODULES = (
-    "airflow_scraping_etl_tutorial_spark.plans.relational",
-    "airflow_scraping_etl_tutorial_spark.plans.relational2",
-    "airflow_scraping_etl_tutorial_spark.plans.relational3",
-    "airflow_scraping_etl_tutorial_spark.plans.functions_catalog",
-    "airflow_scraping_etl_tutorial_spark.plans.twse_queries",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops2",
-    "airflow_scraping_etl_tutorial_spark.plans.relational4",
-    "airflow_scraping_etl_tutorial_spark.plans.streaming_queries",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops3",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops4",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops5",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops6",
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops7",  # wave 8, promoted r7
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops8",  # wave 9, promoted r7
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops9",  # wave 10, promoted r7
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops10",  # wave 11, promoted r7
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops11",  # wave 12, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops12",  # wave 13, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops13",  # wave 14, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops14",  # wave 15, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops15",  # wave 16, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops16",  # wave 17, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops17",  # wave 18, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops18",  # wave 19, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops19",  # wave 20, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops20",  # wave 21, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops21",  # wave 22, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops22",  # wave 23, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops23",  # wave 24, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops24",  # wave 25, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops25",  # wave 26, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops26",  # wave 27, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops27",  # wave 28, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops28",  # wave 29, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops29",  # wave 30, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops30",  # wave 31, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops31",  # wave 32, promoted r8
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops32",  # wave 33, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops33",  # wave 34, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops34",  # wave 35, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops35",  # wave 36, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops36",  # wave 37, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops37",  # wave 38, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops38",  # wave 39, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops39",  # wave 40, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops40",  # wave 41, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops41",  # wave 42, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops42",  # wave 43, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops43",  # wave 44, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops44",  # wave 45, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops45",  # wave 46, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops46",  # wave 47, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops47",  # wave 48, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops48",  # wave 49, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops49",  # wave 50, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops50",  # wave 51, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops51",  # wave 52, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops52",  # wave 53, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops53",  # wave 54, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops54",  # wave 55, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops55",  # wave 56, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops56",  # wave 57, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops57",  # wave 58, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops58",  # wave 59, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops59",  # wave 60, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops60",  # wave 61, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops61",  # wave 62, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops62",  # wave 63, promoted r9
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops63",  # wave 64, promoted r10
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops64",  # wave 65, promoted r10
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops65",  # wave 66, promoted r11
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops66",  # wave 67, promoted r12
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops67",  # wave 68, promoted r12
-    # Waves 69-70 entered _QUERY_MODULES directly in round 12 — a
-    # DELIBERATE exception to the stage-one-round-then-promote protocol
-    # every wave 12-68 followed (r12 ADVICE asked this be recorded):
-    # round 12 had attestation budget to spare, both waves were
-    # strict-oracle-green at three SFs before registration, and the
-    # driver attested all nine entries (q448, q450-q456) GREEN that
-    # same round — the staging protocol's purpose (never burn a driver
-    # attestation on an unproven entry) was met by the pre-checks.
-    # Future waves default back to STAGED_MODULES first.
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops68",  # wave 69, added r12
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops69",  # wave 70, added r12
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops70",  # wave 71, promoted r14
-)
-
-# Staged waves: implemented, pytest-covered, strict-oracle-green, but
-# deliberately NOT in the driver contract until their round's
-# attestation budget clears (see all_queries()). Tooling (explain
-# audit, catalog lint, staged sweeps) loads them from here so the
-# list cannot drift between consumers. Promotion = move the module
-# name into _QUERY_MODULES above.
-STAGED_MODULES: tuple[str, ...] = (
-    # wave 72 (staged r14; wave 71/llm_ops70 promoted r14 per the
-    # stage-one-round-then-promote protocol): map HOFs, timestamp
-    # unit arithmetic, convert_timezone NTZ, string surgery, binary
-    # encoding bridges, bround/bit family. Promotion = move into
-    # _QUERY_MODULES r15.
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops71",
-)
 
 
 @dataclass(frozen=True)
@@ -217,29 +113,15 @@ def _priority(name: str) -> tuple[int, int]:
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    """Import all catalog modules and return the full registry,
-    driver-priority ordered (see _ROUND1_GREEN).
-
-    SPARK_GRAFT_EXTRA_MODULES (comma-separated module paths) lets the
-    local tooling check STAGED catalog modules that are deliberately
-    not yet in _QUERY_MODULES: the driver attests ~50 entries per
-    round, so new waves are held out of the official registry until
-    the round's attestation debt clears, while still being value-
-    checked by tools/check_correctness.py and pytest in the meantime.
-    """
-    allowed = set(_QUERY_MODULES)
-    for mod in _QUERY_MODULES:
-        importlib.import_module(mod)
-    for mod in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_MODULES", "").split(",")):
-        importlib.import_module(mod)
-        allowed.add(mod)
-    # _REGISTRY is process-global: a staged module imported elsewhere in
-    # the same process (e.g. its pytest file) registers its entries for
-    # the process lifetime. The driver contract is only the declared
-    # modules, so filter stray registrations out.
+    """Import every module of the plans package and return the full
+    registry, driver-priority ordered (see _priority); within a tier,
+    entries keep sorted-module then declaration order."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    for mod in sorted(m.name for m in pkgutil.iter_modules([here])):
+        importlib.import_module(f"{__package__}.{mod}")
     order = {n: i for i, n in enumerate(_REGISTRY)}
     names = sorted(
-        (n for n in _REGISTRY if _REGISTRY[n].fn.__module__ in allowed),
-        key=lambda n: (_priority(n), order[n]),
+        _REGISTRY,
+        key=lambda n: (_priority(n), _REGISTRY[n].fn.__module__, order[n]),
     )
     return {n: _REGISTRY[n] for n in names}

@@ -9,6 +9,8 @@ sys.path.insert(0, "/root/repo")
 
 from airflow_scraping_etl_tutorial_spark.session import get_spark
 
+from staged_oracle import duck_views
+
 SF_DIR = "/root/testdata/sf0.001"
 
 # --- Test tiering (r14 VERDICT item 2) -------------------------------
@@ -20,25 +22,25 @@ SF_DIR = "/root/testdata/sf0.001"
 # executes the FAST tier only: the contract surface — registry/bench
 # gate/plan cache/vectorized-kernel pinning/operator semantics/TWSE
 # pipeline — in well under 10 minutes. The SLOW tier (marked-skipped by
-# default, visible as `s` in the output) is the per-wave oracle
-# value-comparison files plus the whole-catalog smoke and the heaviest
-# integration files, all of which duplicate coverage the driver attests
-# separately through CORRECTNESS_rN / tools/check_correctness.py
-# sweeps.
+# default, visible as `s` in the output) is the catalog-wide oracle
+# test, the per-wave files (which now hold only pure-Python replays of
+# their entries) and the heaviest integration files, all of which
+# duplicate coverage the driver attests separately through
+# CORRECTNESS_rN / tools/check_correctness.py sweeps.
 #
-# Full-suite cadence: run before promoting a wave or cutting a round —
+# Full-suite cadence: run before changing a plan or cutting a round —
 #     SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
 # (same command the r14-and-earlier rounds ran by default).
 _SLOW_FILES = frozenset(
     {
-        # whole-catalog smoke: every one of the 462 queries executes
-        # (~16 min) — the check_correctness sweeps run them all WITH
-        # value verification, so the fast tier keeps only the
-        # registry/metadata checks
+        # catalog-wide oracle test: every registered query executes and
+        # is value-compared against its DuckDB oracle — the
+        # check_correctness sweeps run the same comparison, so the fast
+        # tier keeps only the registry/metadata checks
         "test_catalog.py",
         # stream==batch equivalence integration runs (~4.5 min)
         "test_streaming.py",
-        # whole-catalog oracle linting (DuckDB parse of all 462 oracle
+        # whole-catalog oracle linting (DuckDB parse of every oracle
         # texts, ~2 min) — re-verified by every check_correctness run
         "test_oracle_lint.py",
         # heavyweight property/integration files (30-70 s each)
@@ -70,3 +72,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def duck():
+    """One in-memory DuckDB over the sf0.001 tables for the whole run."""
+    con = duck_views(SF_DIR)
+    yield con
+    con.close()

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
+import re
 
 from airflow_scraping_etl_tutorial_spark.plans import registry
 from airflow_scraping_etl_tutorial_spark.plans.registry import (
@@ -111,3 +113,14 @@ def test_ordering_contract_at_committed_state():
     """At the repo's real committed attestation state, the live catalog
     obeys the tier contract (this is what the driver consumes)."""
     _assert_tiering_contract(registry._ATTESTATION)
+
+
+def test_every_declared_query_is_registered():
+    """Discovery guard: all_queries() is exactly the set of `@query("qNNN_…"`
+    declarations across the plans package — a new module registers by
+    existing, and no declared entry can sit outside the contract."""
+    plans = pathlib.Path(registry.__file__).parent
+    declared = set()
+    for path in plans.glob("*.py"):
+        declared |= set(re.findall(r'@query\(\s*"(q\d+_\w+)"', path.read_text()))
+    assert set(all_queries()) == declared

@@ -1,18 +1,15 @@
-"""Staged wave-72 entries (plans/llm_ops71.py — map HOFs, timestamp
-unit arithmetic, convert_timezone NTZ, string surgery, binary encoding
-bridges, bround/bit family): value-level oracle comparison at sf0.001
-plus pure-Python replays — map lambdas from base columns, the
-full-months-elapsed rule in datetime arithmetic, +08:00 wall-clock
-shifts, str-slicing surgery, hashlib/base64 digests, and banker's
-rounding via integer parity."""
+"""Wave-72 entries (plans/llm_ops71.py — map HOFs, timestamp unit
+arithmetic, convert_timezone NTZ, string surgery, binary encoding
+bridges, bround/bit family): pure-Python replays — map lambdas from
+base columns, the full-months-elapsed rule in datetime arithmetic,
++08:00 wall-clock shifts, str-slicing surgery, hashlib/base64 digests,
+and banker's rounding via integer parity."""
 
 from __future__ import annotations
 
 import base64 as b64mod
 import datetime as dt
 import hashlib
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops71  # noqa: F401
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops71 import (
@@ -25,11 +22,9 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops71 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
 
-STAGED = [
+ENTRIES = [
     "q463_map_hof_family",
     "q464_timestamp_unit_arithmetic",
     "q465_convert_timezone_ntz",
@@ -39,41 +34,10 @@ STAGED = [
 ]
 
 
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave72_is_staged_not_live():
-    """The staging protocol: the module is in STAGED_MODULES, NOT in
-    the driver contract, and its entries are invisible to
-    all_queries() without SPARK_GRAFT_EXTRA_MODULES."""
-    import os
-
-    from airflow_scraping_etl_tutorial_spark.plans.registry import (
-        _QUERY_MODULES,
-        STAGED_MODULES,
-        all_queries,
-    )
-
-    assert any("llm_ops71" in m for m in STAGED_MODULES)
-    assert not any("llm_ops71" in m for m in _QUERY_MODULES)
-    assert os.environ.get("SPARK_GRAFT_EXTRA_MODULES") in (None, "")
-    live = set(all_queries())
-    assert not (set(STAGED) & live), "staged entries leaked into the contract"
-
-
 def test_audited_rows_present_for_wave72():
     from staged_oracle import load_explain_audit
 
-    assert set(STAGED) <= set(load_explain_audit().AUDITED)
+    assert set(ENTRIES) <= set(load_explain_audit().AUDITED)
 
 
 # ---------------------------------------------------------------------------
@@ -101,7 +65,7 @@ def test_map_hofs_python_replay(spark, duck):
         f"o_orderkey, ascii(o_orderstatus), "
         f"CAST(substring(o_orderpriority, 1, 1) AS INT), {_CENTS_SQL} % 1000",
     )
-    got = {r.o_orderkey: r for r in _REGISTRY[STAGED[0]].fn(spark, SF_DIR).collect()}
+    got = {r.o_orderkey: r for r in _REGISTRY[ENTRIES[0]].fn(spark, SF_DIR).collect()}
     assert len(got) == len(base)
     for key, s_ord, p_dig, c_small in base:
         r = got[key]
@@ -116,7 +80,7 @@ def test_timestamp_units_python_replay(spark, duck):
     equal times), and DAY/HOUR as floored epoch-second division —
     all in python datetime arithmetic."""
     base = _orders(duck, _TS_KEY_CAP, "o_orderkey, o_orderdate")
-    got = {r.o_orderkey: r for r in _REGISTRY[STAGED[1]].fn(spark, SF_DIR).collect()}
+    got = {r.o_orderkey: r for r in _REGISTRY[ENTRIES[1]].fn(spark, SF_DIR).collect()}
     for key, d1 in base:
         if isinstance(d1, dt.datetime):
             d1 = d1.date()
@@ -141,7 +105,7 @@ def test_convert_timezone_python_replay(spark, duck):
     """+08:00 and +05:30 wall-clock shifts replayed with timedelta;
     the engine-side round-trip boolean must be True on every row."""
     base = _orders(duck, _TZ_KEY_CAP, "o_orderkey, o_orderdate")
-    got = {r.o_orderkey: r for r in _REGISTRY[STAGED[2]].fn(spark, SF_DIR).collect()}
+    got = {r.o_orderkey: r for r in _REGISTRY[ENTRIES[2]].fn(spark, SF_DIR).collect()}
     for key, d in base:
         if isinstance(d, dt.datetime):
             d = d.date()
@@ -163,7 +127,7 @@ def test_string_surgery_python_replay(spark, duck):
     capitalization of the pre-lowered string, and the ASCII
     char==byte length pin."""
     base = _orders(duck, _STR_KEY_CAP)
-    got = {r.o_orderkey: r for r in _REGISTRY[STAGED[3]].fn(spark, SF_DIR).collect()}
+    got = {r.o_orderkey: r for r in _REGISTRY[ENTRIES[3]].fn(spark, SF_DIR).collect()}
     for key, s, p in base:
         r = got[key]
         assert r.patched == p[0] + "###" + p[4:]
@@ -179,7 +143,7 @@ def test_binary_bridges_python_replay(spark, duck):
     bytes.hex(), the UTF-8 round-trip, and both branches of the
     hex-lane quarantine probe."""
     base = _orders(duck, _BIN_KEY_CAP)
-    got = {r.o_orderkey: r for r in _REGISTRY[STAGED[4]].fn(spark, SF_DIR).collect()}
+    got = {r.o_orderkey: r for r in _REGISTRY[ENTRIES[4]].fn(spark, SF_DIR).collect()}
     seen_probe = set()
     for key, s, p in base:
         r = got[key]
@@ -200,7 +164,7 @@ def test_bround_bit_python_replay(spark, duck):
     ints/10), plus the bit family as >>, &, bit_count, and
     factorial."""
     base = _orders(duck, _BIT_KEY_CAP, f"o_orderkey, {_CENTS_SQL}")
-    got = {r.o_orderkey: r for r in _REGISTRY[STAGED[5]].fn(spark, SF_DIR).collect()}
+    got = {r.o_orderkey: r for r in _REGISTRY[ENTRIES[5]].fn(spark, SF_DIR).collect()}
     fact = [1] * 13
     for i in range(2, 13):
         fact[i] = fact[i - 1] * i

@@ -63,19 +63,19 @@ AUDITED = (
     "q169_activity_concentration",
     "q171_prefix_dedup_savings",
     "q182_dedup_cascade_report",
-    # wave 6 (plans/llm_ops5.py; promoted round 6)
+    # wave 6 (plans/llm_ops5.py)
     "q185_dup_cluster_size_histogram",
     "q188_late_arrival_audit",
     "q193_token_gini",
     "q199_psi_value_drift",
     "q202_scd2_point_in_time_join",
-    # wave 7 (plans/llm_ops6.py; promoted round 6)
+    # wave 7 (plans/llm_ops6.py)
     "q204_lsh_threshold_sweep",
     "q208_bloom_incremental_screen",
     "q211_cluster_source_purity",
     "q213_dedup_priority",
     "q214_token_budget_cut",
-    # wave 8 (plans/llm_ops7.py; promoted round 7)
+    # wave 8 (plans/llm_ops7.py)
     "q215_hll_distinct_audit",
     "q216_countmin_heavy_hitters",
     "q217_event_markov_transitions",
@@ -83,7 +83,7 @@ AUDITED = (
     "q219_join_key_skew_audit",
     "q221_incremental_snapshot_delta",
     "q223_assoc_rule_lift",
-    # wave 9 (plans/llm_ops8.py; promoted round 7)
+    # wave 9 (plans/llm_ops8.py)
     "q225_prefix_filter_setjoin",
     "q226_dup_graph_pagerank",
     "q227_join_cardinality_audit",
@@ -92,7 +92,7 @@ AUDITED = (
     "q232_session_gap_sweep",
     "q233_order_reconciliation",
     "q234_mad_outlier_audit",
-    # wave 10 (plans/llm_ops9.py; promoted round 7)
+    # wave 10 (plans/llm_ops9.py)
     "q235_bm25_retrieval",
     "q237_shingle_containment",
     "q238_source_term_cosine",
@@ -101,7 +101,7 @@ AUDITED = (
     "q242_item_cooccurrence_affinity",
     "q244_bigram_entropy_rate",
     "q245_rrf_hybrid_retrieval",
-    # wave 11 (plans/llm_ops10.py; promoted round 7)
+    # wave 11 (plans/llm_ops10.py)
     "q247_ohlc_daily_candles",
     "q249_matryoshka_truncation_audit",
     "q250_connected_components_minlabel",
@@ -109,7 +109,7 @@ AUDITED = (
     "q253_volume_trend_slope",
     "q255_top_event_paths",
     "q256_k_anonymity_audit",
-    # staged wave 12 (plans/llm_ops11.py; auto-loaded via EXTRA_MODULES)
+    # wave 12 (plans/llm_ops11.py)
     "q258_kmeans_converged_assignment",
     "q259_kcore_peel_rounds",
     "q260_duplicate_shingle_coverage",
@@ -118,262 +118,262 @@ AUDITED = (
     "q264_detector_agreement",
     "q265_dedup_mixture_shift",
     "q266_event_type_fano",
-    # staged wave 13 (plans/llm_ops12.py)
+    # wave 13 (plans/llm_ops12.py)
     "q267_histogram_quantile_error",
     "q268_edit_distance_one_join",
     "q269_incremental_signature_maintenance",
     "q270_curriculum_interleave_plan",
     "q271_source_kl_divergence",
     "q272_dedup_keep_policy_impact",
-    # staged wave 14 (plans/llm_ops13.py)
+    # wave 14 (plans/llm_ops13.py)
     "q273_dup_graph_assortativity",
     "q274_blocking_key_quality",
     "q275_mergeable_moments_audit",
     "q276_naive_forecast_backtest",
     "q277_touch_attribution",
     "q278_histogram_merge_audit",
-    # staged wave 15 (plans/llm_ops14.py)
+    # wave 15 (plans/llm_ops14.py)
     "q279_poisson_bootstrap_mean",
     "q280_functional_dependency_audit",
     "q281_source_coverage_curve",
     "q282_hard_negative_mining",
     "q283_padding_waste_audit",
     "q284_memorylessness_audit",
-    # staged wave 16 (plans/llm_ops15.py)
+    # wave 16 (plans/llm_ops15.py)
     "q285_waterfill_token_allocation",
     "q286_ranking_stability_bootstrap",
     "q287_type_hour_mutual_information",
     "q288_dictionary_encoding_benefit",
     "q289_runtime_filter_benefit",
-    # staged wave 17 (plans/llm_ops16.py)
+    # wave 17 (plans/llm_ops16.py)
     "q290_quantile_stability_bootstrap",
     "q291_step_changepoint",
     "q292_cusum_drift",
-    # staged wave 18 (plans/llm_ops17.py)
+    # wave 18 (plans/llm_ops17.py)
     "q293_theil_sen_slope",
     "q294_mann_kendall_trend",
     "q295_daily_autocorrelation",
-    # staged wave 19 (plans/llm_ops18.py)
+    # wave 19 (plans/llm_ops18.py)
     "q296_ab_chisquare_conversion",
     "q297_empirical_bayes_rates",
     "q298_capture_recapture_estimate",
     "q299_unseen_vocab_estimators",
-    # staged wave 20 (plans/llm_ops19.py)
+    # wave 20 (plans/llm_ops19.py)
     "q300_permutation_test_conversion",
     "q301_standardized_conversion",
     "q302_difference_in_differences",
-    # staged wave 21 (plans/llm_ops20.py)
+    # wave 21 (plans/llm_ops20.py)
     "q303_kaplan_meier_conversion",
     "q304_logrank_test",
-    # staged wave 22 (plans/llm_ops21.py)
+    # wave 22 (plans/llm_ops21.py)
     "q305_postings_compression_audit",
     "q306_fold_dup_leakage",
     "q307_source_ablation_coverage",
     "q308_resharding_migration_audit",
-    # staged wave 23 (plans/llm_ops22.py)
+    # wave 23 (plans/llm_ops22.py)
     "q309_phrase_query_positional",
     "q310_ab_power_sample_size",
     "q311_greedy_source_selection",
-    # staged wave 24 (plans/llm_ops23.py)
+    # wave 24 (plans/llm_ops23.py)
     "q312_zorder_skipping_benefit",
     "q313_rle_sortorder_benefit",
-    # staged wave 25 (plans/llm_ops24.py)
+    # wave 25 (plans/llm_ops24.py)
     "q314_ams_selfjoin_estimate",
     "q315_join_order_cost_audit",
     "q316_predicate_correlation_audit",
-    # staged wave 26 (plans/llm_ops25.py)
+    # wave 26 (plans/llm_ops25.py)
     "q317_markov_absorption_reach",
     "q318_hill_tail_index",
     "q319_follow_leader_regret",
-    # staged wave 27 (plans/llm_ops26.py)
+    # wave 27 (plans/llm_ops26.py)
     "q320_rolling_distinct_audit",
     "q321_markov_order_audit",
-    # staged wave 28 (plans/llm_ops27.py)
+    # wave 28 (plans/llm_ops27.py)
     "q322_anova_source_lengths",
     "q323_gains_curve",
     "q324_ks_two_sample",
-    # staged wave 29 (plans/llm_ops28.py)
+    # wave 29 (plans/llm_ops28.py)
     "q325_mann_whitney_binned",
     "q326_bh_fdr_control",
-    # staged wave 30 (plans/llm_ops29.py)
+    # wave 30 (plans/llm_ops29.py)
     "q327_cuped_variance_reduction",
     "q328_jackknife_ratio_dispersion",
-    # staged wave 31 (plans/llm_ops30.py)
+    # wave 31 (plans/llm_ops30.py)
     "q329_isotonic_calibration",
     "q330_reliability_ece",
-    # staged wave 32 (plans/llm_ops31.py)
+    # wave 32 (plans/llm_ops31.py)
     "q331_conformal_coverage",
-    # staged wave 33 (plans/llm_ops32.py)
+    # wave 33 (plans/llm_ops32.py)
     "q332_retrieval_ndcg_audit",
     "q333_retrieval_precision_recall",
     "q334_rank_correlation_kendall",
     "q335_t_closeness_audit",
     "q336_dp_histogram_utility",
-    # staged wave 34 (plans/llm_ops33.py)
+    # wave 34 (plans/llm_ops33.py)
     "q337_dup_graph_triangles",
     "q338_stupid_backoff_scoring",
     "q339_weighted_sample_aes",
     "q340_compaction_plan_audit",
     "q341_tfidf_source_keywords",
-    # staged wave 35 (plans/llm_ops34.py)
+    # wave 35 (plans/llm_ops34.py)
     "q342_reciprocal_best_match",
     "q343_join_ivm_delta_audit",
     "q344_allocation_design_effect",
     "q345_weighted_sample_merge_proof",
-    # staged wave 36 (plans/llm_ops35.py)
+    # wave 36 (plans/llm_ops35.py)
     "q346_langid_confusion_audit",
     "q347_markov_next_event_accuracy",
     "q348_session_likelihood_outliers",
-    # staged wave 37 (plans/llm_ops36.py)
+    # wave 37 (plans/llm_ops36.py)
     "q349_randomized_response_debias",
     "q350_bitpacking_benefit",
     "q351_windowed_funnel_sweep",
-    # staged wave 38 (plans/llm_ops37.py)
+    # wave 38 (plans/llm_ops37.py)
     "q352_horvitz_thompson_total",
     "q353_rater_agreement_kappa",
     "q354_runs_test_assignment",
     "q355_novel_ngram_rate",
     "q356_temperature_source_mixture",
-    # staged wave 39 (plans/llm_ops38.py)
+    # wave 39 (plans/llm_ops38.py)
     "q357_data_scaling_curve",
     "q358_mcnemar_classifier_test",
     "q359_embedding_decontamination",
-    # staged wave 40 (plans/llm_ops39.py)
+    # wave 40 (plans/llm_ops39.py)
     "q360_wilcoxon_signed_rank",
     "q361_cochran_q_raters",
     "q362_winsorized_daily_mean",
-    # staged wave 41 (plans/llm_ops40.py)
+    # wave 41 (plans/llm_ops40.py)
     "q363_sprt_early_stopping",
     "q364_stratified_ate",
     "q365_apportioned_eval_sample",
-    # staged wave 42 (plans/llm_ops41.py)
+    # wave 42 (plans/llm_ops41.py)
     "q366_mantel_haenszel_rr",
     "q367_readability_by_source",
     "q368_confusion_cramers_v",
-    # staged wave 43 (plans/llm_ops42.py)
+    # wave 43 (plans/llm_ops42.py)
     "q369_shared_span_localization",
     "q370_brier_decomposition",
     "q371_median_confidence_interval",
-    # staged wave 44 (plans/llm_ops43.py)
+    # wave 44 (plans/llm_ops43.py)
     "q372_kcenter_coreset_picks",
     "q373_split_balance_chisquare",
     "q374_split_length_emd",
-    # staged wave 45 (plans/llm_ops44.py)
+    # wave 45 (plans/llm_ops44.py)
     "q375_dup_graph_lang_modularity",
     "q376_benford_first_digit",
     "q377_timestamp_delta_encoding",
-    # staged wave 46 (plans/llm_ops45.py)
+    # wave 46 (plans/llm_ops45.py)
     "q378_fellegi_sunter_weights",
     "q379_selection_regression_to_mean",
     "q380_decile_qte",
-    # staged wave 47 (plans/llm_ops46.py)
+    # wave 47 (plans/llm_ops46.py)
     "q381_ldiversity_tcloseness",
     "q382_ttl_cache_hit_curve",
     "q383_hub_removal_robustness",
-    # staged wave 48 (plans/llm_ops47.py)
+    # wave 48 (plans/llm_ops47.py)
     "q384_term_adaptation",
     "q385_referential_integrity",
     "q386_rapid_repeat_orders",
-    # staged wave 49 (plans/llm_ops48.py)
+    # wave 49 (plans/llm_ops48.py)
     "q387_cohort_retention",
     "q388_topk_leaderboard_churn",
     "q389_activity_max_drawdown",
-    # staged wave 50 (plans/llm_ops49.py)
+    # wave 50 (plans/llm_ops49.py)
     "q390_median_mad_anomaly_days",
     "q391_covariate_balance_smd",
     "q392_shipping_lag_slo",
-    # staged wave 51 (plans/llm_ops50.py)
+    # wave 51 (plans/llm_ops50.py)
     "q393_growth_decomposition",
     "q394_discount_quantity_elasticity",
     "q395_deletion_cascade_impact",
-    # staged wave 52 (plans/llm_ops51.py)
+    # wave 52 (plans/llm_ops51.py)
     "q396_pareto_skyline",
     "q397_range_split_points",
     "q398_abc_classification",
-    # staged wave 53 (plans/llm_ops52.py)
+    # wave 53 (plans/llm_ops52.py)
     "q399_open_order_concurrency",
     "q400_stockout_running_balance",
     "q401_primary_key_uniqueness",
-    # staged wave 54 (plans/llm_ops53.py)
+    # wave 54 (plans/llm_ops53.py)
     "q402_cross_source_dup_matrix",
     "q403_daily_lead_lag",
     "q404_frequent_brand_triples",
-    # staged wave 55 (plans/llm_ops54.py)
+    # wave 55 (plans/llm_ops54.py)
     "q405_histogram_selectivity_error",
     "q406_front_coding_benefit",
     "q407_ltv_curve",
-    # staged wave 56 (plans/llm_ops55.py)
+    # wave 56 (plans/llm_ops55.py)
     "q408_equidepth_selectivity_error",
     "q409_feature_hash_collisions",
     "q410_zipf_tail_fit",
-    # staged wave 57 (plans/llm_ops56.py)
+    # wave 57 (plans/llm_ops56.py)
     "q411_decision_stump",
     "q412_hash_partition_balance",
     "q413_error_budget_burn",
-    # staged wave 58 (plans/llm_ops57.py)
+    # wave 58 (plans/llm_ops57.py)
     "q414_join_fanout_audit",
     "q415_overdispersion_audit",
     "q416_event_cooccurrence_lift",
-    # staged wave 59 (plans/llm_ops58.py)
+    # wave 59 (plans/llm_ops58.py)
     "q417_simpson_reversal",
     "q418_user_effective_variety",
     "q419_peak_window_share",
-    # staged wave 60 (plans/llm_ops59.py)
+    # wave 60 (plans/llm_ops59.py)
     "q420_fulfillment_trend",
     "q421_cdc_chunk_dedup",
     "q422_backlog_aging",
-    # staged wave 61 (plans/llm_ops60.py)
+    # wave 61 (plans/llm_ops60.py)
     "q423_concentration_drift",
     "q424_alert_run_lengths",
     "q425_preagg_pushdown_equivalence",
-    # staged wave 62 (plans/llm_ops61.py)
+    # wave 62 (plans/llm_ops61.py)
     "q426_dedup_winner_bias",
     "q427_retention_decay",
     "q428_change_contributors",
-    # staged wave 63 (plans/llm_ops62.py)
+    # wave 63 (plans/llm_ops62.py)
     "q429_oov_rate",
     "q430_keyspace_holes",
     "q431_popularity_baseline_hitrate",
-    # wave 64 (plans/llm_ops63.py, promoted r10)
+    # wave 64 (plans/llm_ops63.py)
     "q432_data_dictionary",
     "q433_tokenizer_fertility",
     "q434_effort_to_convert",
-    # wave 65 (plans/llm_ops64.py, promoted r10)
+    # wave 65 (plans/llm_ops64.py)
     "q435_littles_law_flow_identity",
     "q436_systematic_sample_bias",
     "q437_temporal_integrity_audit",
-    # wave 66 (plans/llm_ops65.py, promoted r11)
+    # wave 66 (plans/llm_ops65.py)
     "q438_variant_json_extraction",
     "q439_sql_udf_decomma_totals",
-    # wave 67 (plans/llm_ops66.py, promoted r12)
+    # wave 67 (plans/llm_ops66.py)
     "q440_recursive_cte_amortization",
     "q441_pipe_syntax_pricing",
     "q442_listagg_ordered_csv",
     "q443_sql_scripting_threshold_search",
-    # wave 68 (plans/llm_ops67.py, promoted r12)
+    # wave 68 (plans/llm_ops67.py)
     "q444_group_by_all_pricing",
     "q445_identifier_parameterized_scan",
     "q446_tablesample_repeatable_audit",
     "q447_observe_metrics_single_pass",
     "q448_hll_sketch_native_agg",
     "q449_try_arithmetic_safe_lane",
-    # wave 69 (plans/llm_ops68.py, added r12)
+    # wave 69 (plans/llm_ops68.py)
     "q450_merge_upsert_idempotent",
     "q451_scd2_validity_intervals",
-    # wave 70 (plans/llm_ops69.py, added r12)
+    # wave 70 (plans/llm_ops69.py)
     "q452_bitmap_exact_distinct",
     "q453_inverse_distribution_percentiles",
     "q454_luhn_checksum_validation",
     "q455_width_bucket_histogram",
     "q456_parse_url_components",
-    # wave 71 (plans/llm_ops70.py, staged r13, promoted r14)
+    # wave 71 (plans/llm_ops70.py)
     "q457_regr_linear_family",
     "q458_str_to_map_kv_extraction",
     "q459_interval_date_arithmetic",
     "q460_array_mutation_functions",
     "q461_try_cast_quarantine",
     "q462_collated_case_insensitive_grouping",
-    # wave 72 (plans/llm_ops71.py, STAGED r14)
+    # wave 72 (plans/llm_ops71.py)
     "q463_map_hof_family",
     "q464_timestamp_unit_arithmetic",
     "q465_convert_timezone_ntz",
@@ -593,24 +593,6 @@ def audit_plan(plan: str) -> dict:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("explain_audit")
-    # Audit staged waves too, regardless of whether the caller exported
-    # SPARK_GRAFT_EXTRA_MODULES (the driver contract is unaffected —
-    # this tool only reads plans).
-    import os
-
-    from airflow_scraping_etl_tutorial_spark.plans.registry import STAGED_MODULES
-
-    # UNION the staged waves into whatever the caller exported — a
-    # plain setdefault would keep a caller's partial list and the
-    # audit would KeyError on the missing waves' entries.
-    preset = [
-        m
-        for m in os.environ.get("SPARK_GRAFT_EXTRA_MODULES", "").split(",")
-        if m
-    ]
-    os.environ["SPARK_GRAFT_EXTRA_MODULES"] = ",".join(
-        dict.fromkeys(preset + list(STAGED_MODULES))
-    )
     specs = all_queries()
 
     unexplained: list[str] = []
