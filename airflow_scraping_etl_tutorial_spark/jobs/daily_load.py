@@ -15,7 +15,11 @@ Usage:
 
 Exit codes (the Airflow-visible contract):
     0 = loaded (or clean market-closed no-op)
-    3 = validation alert (schema drift — reference alert route)
+    3 = validation alert (schema drift — reference alert route); the DAG
+        skips on it, since a retry would fetch the same drifted payload
+    4 = failed fetch, ahead of 3: some day had no payload (stat null). Any
+        good days of the run are loaded; the non-zero exit lets
+        Airflow's retry policy fetch the failed days again
     other = hard failure (Airflow retry policy applies)
 """
 
@@ -24,6 +28,9 @@ from __future__ import annotations
 import argparse
 import sys
 from datetime import datetime, timedelta
+
+EXIT_ALERT = 3
+EXIT_FETCH_FAILED = 4
 
 
 def date_range(start: str, end: str) -> list[str]:
@@ -61,7 +68,12 @@ def main(argv: list[str] | None = None, fetcher=None, notify=None) -> int:
 
         by_date = {
             p["date"]: p
-            for p in (golden.GOLDEN_OK, golden.GOLDEN_CLOSED, golden.GOLDEN_WRONG_ARITY)
+            for p in (
+                golden.GOLDEN_OK,
+                golden.GOLDEN_CLOSED,
+                golden.GOLDEN_WRONG_ARITY,
+                golden.GOLDEN_FAILED,
+            )
         }
 
         def fetcher(spark_, ds):  # noqa: ANN001
@@ -79,7 +91,9 @@ def main(argv: list[str] | None = None, fetcher=None, notify=None) -> int:
         f"route={result.route} days_loaded={result.days_loaded} "
         f"alerts={','.join(result.alerts) or '-'}"
     )
-    return 3 if result.route == "alert" else 0
+    if result.failed_fetches:
+        return EXIT_FETCH_FAILED
+    return EXIT_ALERT if result.route == "alert" else 0
 
 
 if __name__ == "__main__":

@@ -1,50 +1,110 @@
 """The reference ETL (scrape -> branch -> clean -> validate -> load ->
-notify) re-expressed as ONE declarative Spark plan.
+notify) re-expressed as one Spark aggregation plus driver routing.
 
 Reference lifecycle (dags/Final_app.py:79-149): five Airflow tasks with
 XCom handoffs and Jinja-templated INSERTs. Engine lifecycle (SURVEY.md
-§3.4): a single DataFrame flows
+§3.4): the payload frame flows through one plan
 
-    payload -> filter(stat='OK') -> explode(data) -> drop 合計
-            -> de-comma/cast Decimal(38,0) -> pivot to 13 columns
-            -> validate -> idempotent write -> notify
+    payload -> explode(data of stat='OK' days) -> drop 合計
+            -> de-comma/cast Decimal(38,0)
+            -> groupBy(dt): fetch outcome, arity, dif check and the 12
+               sink values, keyed on the category value
+
+and that plan's one collect (one row per day) drives everything else on
+the driver: routing, notification, and the partition-overwrite write of
+the good days, made from the collected rows as a driver-local Arrow
+frame. The payloads are therefore scanned once, by one action, whether
+they sit in the JVM (``payloads_to_df``) or are fetched by executors
+(``fetch_payloads_distributed``); nothing is cached.
 
 Differences from the reference, by design:
 - fetch once, not twice (Final_app.py:26 + :45 double-fetch);
-- pivot keys on the 單位名稱 category VALUES, not row position
+- the wide row keys on the 單位名稱 category VALUES, not row position
   (Final_app.py:50-66 breaks if TWSE reorders rows; we don't);
 - money is DecimalType(38,0) not TEXT (exact arithmetic beyond float
   range — the reason the reference chose TEXT, README.md:292);
 - loads are idempotent: dynamic partition overwrite on dt replaces
   any existing rows for the same day (the reference's retry policy
   double-inserts, Final_app.py:18 + no PK in create_table.sql);
+- a failed fetch (``stat`` null, no payload) is an alert, not a
+  market-closed day, so the job can exit with a retryable code;
 - validation is a DataFrame predicate (P7), routing is driver control
   flow on action results (C1), notification is a callback (S7/S8).
 
-Scale: a single day is one tiny document, but the same plan handles a
-20-year backfill unchanged — explode/pivot/write are set-oriented and
-the sink is partitioned by dt, so each day lands in its own partition
-and reruns replace exactly that partition.
+``validate`` and ``pivot_to_sink_schema`` are projections of the same
+aggregation, for callers that hold a long frame.
+
+Scale: one row per day reaches the driver, so a 20-year backfill
+(~5k days) collects ~5k small rows; the sink is partitioned by dt, so
+each day lands in its own partition and reruns replace exactly that
+partition.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..sources.twse import CATEGORIES, TOTAL_ROW_LABEL
+from ..sources.twse import CATEGORIES, TOTAL_ROW_LABEL, local_frame
 
 EXPECTED_VALUES_PER_DAY = 12  # 4 categories x 3 measures (Final_app.py:53)
 
 MONEY = "decimal(38,0)"
+MEASURES = ("buy", "sell", "dif")
 
 # Sink schema = reference create_table.sql:2-16, strongly typed.
 SINK_COLUMNS = ("dt",) + tuple(
-    f"{prefix}_{measure}" for _, prefix in CATEGORIES for measure in ("buy", "sell", "dif")
+    f"{prefix}_{measure}" for _, prefix in CATEGORIES for measure in MEASURES
 )
+SINK_SCHEMA = T.StructType(
+    [T.StructField("dt", T.StringType())]
+    + [T.StructField(c, T.DecimalType(38, 0)) for c in SINK_COLUMNS[1:]]
+)
+
+
+# The plan is written as SQL expression strings, so each DataFrame step
+# is one call into the JVM. Composed from Column objects, it makes one
+# call per expression node and took about 4x as long to build (warm JVM,
+# 4 vCPUs: ~150 ms against ~35 ms), as long as the aggregation then
+# takes to run on a day's payload.
+_DE_COMMA = "CAST(regexp_replace(row[{i}], ',', '') AS " + MONEY + ") AS {measure}"
+_VERDICTS = (
+    "count(unit_name) * 3 AS n_values",
+    f"count(unit_name) * 3 = {EXPECTED_VALUES_PER_DAY} AS arity_ok",
+    "count_if(dif != buy - sell) = 0 AS dif_ok",
+)
+_VALUES = tuple(
+    f"first(CASE WHEN unit_name = '{label}' THEN {measure} END, true) AS {prefix}_{measure}"
+    for label, prefix in CATEGORIES
+    for measure in MEASURES
+)
+
+
+def _exploded(payloads: DataFrame) -> DataFrame:
+    """Payload documents -> (dt, stat, unit_name, buy, sell, dif).
+
+    One row per category row of a stat='OK' payload, and one row with a
+    null unit_name for every other payload (market closed, failed fetch,
+    or OK without data), so each day's fetch outcome survives the
+    explode.
+    """
+    return (
+        payloads.selectExpr(
+            "date AS dt", "stat", "explode_outer(CASE WHEN stat = 'OK' THEN data END) AS row"
+        )
+        .selectExpr(
+            "dt",
+            "stat",
+            "row[0] AS unit_name",
+            *(_DE_COMMA.format(i=i, measure=m) for i, m in enumerate(MEASURES, 1)),
+        )
+        .where(f"NOT unit_name <=> '{TOTAL_ROW_LABEL}'")
+    )
 
 
 def clean_long(payloads: DataFrame) -> DataFrame:
@@ -55,72 +115,43 @@ def clean_long(payloads: DataFrame) -> DataFrame:
     (P1), strip thousands separators (P3), cast to exact decimals.
     Market-closed days (stat != 'OK', P8) simply produce no rows.
     """
-    de_comma = lambda c: F.regexp_replace(c, ",", "").cast(MONEY)  # noqa: E731
-    return (
-        payloads.filter(F.col("stat") == "OK")
-        .select(F.col("date").alias("dt"), F.explode("data").alias("row"))
-        .select(
-            "dt",
-            F.col("row")[0].alias("unit_name"),
-            de_comma(F.col("row")[1]).alias("buy"),
-            de_comma(F.col("row")[2]).alias("sell"),
-            de_comma(F.col("row")[3]).alias("dif"),
-        )
-        .filter(F.col("unit_name") != TOTAL_ROW_LABEL)
-    )
+    return _exploded(payloads).where("unit_name IS NOT NULL").drop("stat")
+
+
+def _daily(long_df: DataFrame, *extra: str) -> DataFrame:
+    """The one aggregation: per dt, the verdicts (reference P7:
+    len(data)==12, Final_app.py:53, plus the dif=buy-sell invariant the
+    source embeds, §1.2) and the 12 sink values (reference P5).
+
+    A value is the measure of the row whose category matches, so the
+    result does not depend on row order. Rows with a null unit_name
+    count toward no verdict or value. ``extra`` adds aggregate
+    expressions over further columns of ``long_df``.
+    """
+    return long_df.groupBy("dt").agg(*(F.expr(e) for e in (*_VERDICTS, *extra, *_VALUES)))
 
 
 def pivot_to_sink_schema(long_df: DataFrame) -> DataFrame:
-    """Long (4 rows/day) -> wide (1 row/day, 13 columns): reference P5.
-
-    Keys on the category value (robust to payload reordering). Explicit
-    pivot value list: no distinct-scan job, stable column order.
-    """
-    labels = [label for label, _ in CATEGORIES]
-    wide = (
-        long_df.groupBy("dt")
-        .pivot("unit_name", labels)
-        .agg(F.first("buy").alias("buy"), F.first("sell").alias("sell"), F.first("dif").alias("dif"))
-    )
-    selects = [F.col("dt")]
-    for label, prefix in CATEGORIES:
-        for measure in ("buy", "sell", "dif"):
-            selects.append(F.col(f"`{label}_{measure}`").alias(f"{prefix}_{measure}"))
-    return wide.select(*selects)
+    """Long (4 rows/day) -> wide (1 row/day, 13 columns in sink order)."""
+    return _daily(long_df).select(*SINK_COLUMNS)
 
 
 def validate(long_df: DataFrame) -> DataFrame:
-    """Schema-drift gate (reference P7: len(data)==12, Final_app.py:53)
-    plus the dif=buy-sell invariant the source embeds (§1.2).
-
-    Returns one row per dt with boolean verdicts; empty input -> empty
-    output (the market-closed no-op, C2).
-    """
-    return (
-        long_df.groupBy("dt")
-        .agg(
-            (F.count(F.lit(1)) * 3).alias("n_values"),
-            F.sum(F.when(F.col("dif") != F.col("buy") - F.col("sell"), 1).otherwise(0)).alias(
-                "n_bad_dif"
-            ),
-        )
-        .select(
-            "dt",
-            "n_values",
-            (F.col("n_values") == EXPECTED_VALUES_PER_DAY).alias("arity_ok"),
-            (F.col("n_bad_dif") == 0).alias("dif_ok"),
-        )
-    )
+    """Schema-drift gate: one row per dt with n_values and the boolean
+    verdicts arity_ok and dif_ok; empty input -> empty output (the
+    market-closed no-op, C2)."""
+    return _daily(long_df).select("dt", "n_values", "arity_ok", "dif_ok")
 
 
 @dataclass
 class RunResult:
     """Outcome of one pipeline run (the engine's answer to the DAG's
-    branch routes: loaded / market closed / validation alert)."""
+    branch routes: loaded / market closed / alert)."""
 
     route: str  # 'loaded' | 'market_closed' | 'alert'
     days_loaded: int
-    alerts: list[str]
+    alerts: list[str]  # days that failed validation or had no payload
+    failed_fetches: list[str] = field(default_factory=list)  # days with no payload
 
 
 def run_daily_load(
@@ -131,53 +162,69 @@ def run_daily_load(
 ) -> RunResult:
     """End-to-end daily load with branch semantics and idempotent write.
 
-    Control flow (reference C1) happens HERE, on action results — not in
-    the plan: Catalyst owns the dataflow, the driver owns routing.
+    Control flow (reference C1) happens HERE, on the collected per-day
+    verdicts — not in the plan: Catalyst owns the dataflow, the driver
+    owns routing. A day whose payload has a null stat (the fetch failed)
+    is an alert; a day with a stat other than 'OK' is market closed; the
+    other days load if they pass validation. Good days load even when
+    others in the same run alert.
     """
-    long_df = clean_long(payloads).cache()  # reused by validate + pivot: fetch once (vs S1 double-fetch)
-    try:
-        checks = validate(long_df).collect()
-        if not checks:
-            # stat != 'OK' everywhere: market closed -> no-op (C2/DummyOperator).
-            return RunResult(route="market_closed", days_loaded=0, alerts=[])
+    # The one action over payloads: a fetch inside them runs once.
+    days = _daily(_exploded(payloads), "bool_or(stat IS NULL) AS fetch_failed").collect()
+    failed = sorted(r.dt for r in days if r.fetch_failed)
+    traded = [r for r in days if r.n_values and not r.fetch_failed]
+    if not (failed or traded):
+        # stat != 'OK' everywhere: market closed -> no-op (C2/DummyOperator).
+        return RunResult(route="market_closed", days_loaded=0, alerts=[])
 
-        bad = [r.dt for r in checks if not (r.arity_ok and r.dif_ok)]
-        good_dts = [r.dt for r in checks if r.arity_ok and r.dif_ok]
-        if bad and notify:
-            # Reference S8: fixed-text Telegram alert '資料格式有變動...'
-            notify(f"資料格式有變動，請確認資料格式: dt={sorted(bad)}")
-        if not good_dts:
-            return RunResult(route="alert", days_loaded=0, alerts=sorted(bad))
+    good = [r for r in traded if r.arity_ok and r.dif_ok]
+    bad = sorted(r.dt for r in traded if not (r.arity_ok and r.dif_ok))
+    if bad and notify:
+        # Reference S8: fixed-text Telegram alert '資料格式有變動...'
+        notify(f"資料格式有變動，請確認資料格式: dt={bad}")
+    if failed and notify:
+        notify(f"資料抓取失敗，將重試: dt={failed}")
+    alerts = sorted(failed + bad)
+    if not good:
+        return RunResult(route="alert", days_loaded=0, alerts=alerts, failed_fetches=failed)
 
-        wide = pivot_to_sink_schema(long_df.filter(F.col("dt").isin(good_dts)))
-        # Idempotent daily append: partition-overwrite on dt (SURVEY §7
-        # hard-part 1 — Delta MERGE without Delta). Rerunning a day
-        # replaces exactly that day's partition; other days untouched.
-        (
-            wide.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("dt")
-            .parquet(sink_path)
-        )
-        if notify:
-            # Reference S7: success notification with the loaded date(s).
-            notify(f"每日盤後資訊已完成更新: dt={sorted(good_dts)}")
-        return RunResult(
-            route="loaded" if not bad else "alert",
-            days_loaded=len(good_dts),
-            alerts=sorted(bad),
-        )
-    finally:
-        long_df.unpersist()
+    # Idempotent daily append: partition-overwrite on dt (SURVEY §7
+    # hard-part 1 — Delta MERGE without Delta). Rerunning a day
+    # replaces exactly that day's partition; other days untouched.
+    (
+        local_frame(spark, [r.asDict() for r in good], SINK_SCHEMA)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("dt")
+        .parquet(sink_path)
+    )
+    good_dts = sorted(r.dt for r in good)
+    if notify:
+        # Reference S7: success notification with the loaded date(s).
+        notify(f"每日盤後資訊已完成更新: dt={good_dts}")
+    return RunResult(
+        route="alert" if alerts else "loaded",
+        days_loaded=len(good),
+        alerts=alerts,
+        failed_fetches=failed,
+    )
 
 
 def read_sink(spark: SparkSession, sink_path: str, dt: str | None = None) -> DataFrame:
-    """Read back the sink (reference S3/S4). A dt filter prunes to one
-    partition — the engine form of `SELECT * WHERE dt='20220819'`.
+    """Read back the sink (reference S3/S4) with its explicit schema:
+    no footer inference, and dt stays a string (partition-type inference
+    would read dt=20220819 back as int). Columns: the 12 values, then dt.
 
-    dt is re-cast to string: Spark's partition-column type inference
-    reads dt=20220819 directories back as int, which would silently
-    change the sink schema between write and read.
+    A dt reads only that day's partition directory — the engine form of
+    `SELECT * WHERE dt='20220819'` — so its cost does not grow with the
+    sink. A dt with no partition reads as an empty frame.
     """
-    df = spark.read.parquet(sink_path).withColumn("dt", F.col("dt").cast("string"))
-    return df.filter(F.col("dt") == dt) if dt else df
+    reader = spark.read.schema(SINK_SCHEMA)
+    if dt is None:
+        return reader.parquet(sink_path)
+    try:
+        return reader.option("basePath", sink_path).parquet(f"{sink_path}/dt={dt}")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return local_frame(spark, [], SINK_SCHEMA).select(*SINK_COLUMNS[1:], "dt")

@@ -74,3 +74,17 @@ GOLDEN_WRONG_ARITY = {
     "params": {"response": "json", "dayDate": "20100106"},
     "notes": None,
 }
+
+# A4 — failed fetch (2022-08-22): no payload came back, the row that
+# fetch_payloads_distributed yields when the HTTP call fails. Only the
+# date is known; the load routes it to alert and the job exits 4 so
+# Airflow retries.
+GOLDEN_FAILED = {
+    "stat": None,
+    "title": None,
+    "fields": None,
+    "date": "20220822",
+    "data": None,
+    "params": None,
+    "notes": None,
+}

@@ -65,21 +65,34 @@ def _http_get_json(url: str, timeout: float = 30.0) -> dict:
         return json.loads(resp.read().decode("utf-8"))
 
 
+def local_frame(spark: SparkSession, rows: Iterable[dict], schema: T.StructType) -> DataFrame:
+    """Driver-side rows (dicts keyed by field name; a missing key is
+    null) -> an Arrow-backed DataFrame over ``schema``.
+
+    The rows travel to the JVM as one Arrow stream and the plan leaf is
+    a ``LocalRelation``, so every action over the frame runs in the JVM.
+    ``createDataFrame`` over a Python list instead builds an RDD that
+    each action re-serializes through Python worker tasks.
+    """
+    import pyarrow as pa  # deferred: importing this module stays cheap
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def payloads_to_df(spark: SparkSession, payloads: Iterable[dict]) -> DataFrame:
-    """Materialize raw payload dicts as a typed DataFrame (test seam)."""
+    """Raw payload dicts -> a typed PAYLOAD_SCHEMA frame held in the JVM.
+
+    The driver-side fetch, the golden replay and tests all come through
+    here. Arrow takes a map as a list of (key, value) items, so
+    ``params`` is converted; every other field passes as is.
+    """
     rows = [
-        (
-            p.get("stat"),
-            p.get("title"),
-            p.get("fields"),
-            p.get("date"),
-            p.get("data"),
-            p.get("params"),
-            p.get("notes"),
-        )
+        {**p, "params": None if p.get("params") is None else list(p["params"].items())}
         for p in payloads
     ]
-    return spark.createDataFrame(rows, PAYLOAD_SCHEMA)
+    return local_frame(spark, rows, PAYLOAD_SCHEMA)
 
 
 def fetch_payloads(spark: SparkSession, dates: list[str]) -> DataFrame:
@@ -92,15 +105,15 @@ def fetch_payloads_distributed(spark: SparkSession, dates: list[str]) -> DataFra
 
     The date list becomes a DataFrame repartitioned so each task owns a
     slice; mapInPandas issues the HTTP calls executor-side in Arrow
-    batches. Unreachable/invalid days yield stat=null rows (schema gate
-    P7 routes them to the alert path downstream).
+    batches. Unreachable/invalid days yield stat=null rows, which
+    ``run_daily_load`` routes to the alert path with a retryable exit.
     """
     import pandas as pd
 
     n_parts = max(1, min(len(dates), 64))
-    dates_df = spark.createDataFrame([(d,) for d in dates], "fetch_date string").repartition(
-        n_parts, "fetch_date"
-    )
+    schema = T.StructType([T.StructField("fetch_date", T.StringType())])
+    dates_df = local_frame(spark, [{"fetch_date": d} for d in dates], schema)
+    dates_df = dates_df.repartition(n_parts, "fetch_date")
 
     def fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

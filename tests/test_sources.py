@@ -46,6 +46,35 @@ def test_distributed_backfill_fetch(spark, monkeypatch):
     assert wide.first().dt == "20220819"
 
 
+def test_distributed_backfill_load_fetches_each_day_once(spark, monkeypatch, tmp_path):
+    """run_daily_load over the executor-side fetch: one action, so each
+    date is fetched exactly once; the good day loads and the failed one
+    alerts."""
+    from airflow_scraping_etl_tutorial_spark.pipeline.investment import (
+        read_sink,
+        run_daily_load,
+    )
+
+    payloads = {"20220819": GOLDEN_OK, "20220820": GOLDEN_CLOSED}
+    log = tmp_path / "fetches.log"
+
+    def fake_fetch(url: str, timeout: float = 30.0) -> dict:
+        date = url.rsplit("=", 1)[-1]
+        with open(log, "a") as f:  # the UDF runs in a Python worker process
+            f.write(date + "\n")
+        if date not in payloads:
+            raise OSError("unreachable")
+        return payloads[date]
+
+    monkeypatch.setattr(twse, "_http_get_json", fake_fetch)
+    dates = ["20220819", "20220820", "20990101"]
+    sink = str(tmp_path / "sink")
+    res = run_daily_load(spark, twse.fetch_payloads_distributed(spark, dates), sink)
+    assert sorted(log.read_text().split()) == dates
+    assert (res.route, res.days_loaded, res.alerts) == ("alert", 1, ["20990101"])
+    assert [r.dt for r in read_sink(spark, sink).collect()] == ["20220819"]
+
+
 def test_events_ts_microsecond_conversion(spark):
     """tables.load converts TIMESTAMP(NANOS) -> TimestampType exactly
     (integer ns->µs division, cross-checked against DuckDB's reading

@@ -21,11 +21,34 @@ from airflow_scraping_etl_tutorial_spark.pipeline.investment import (
 )
 from airflow_scraping_etl_tutorial_spark.sources.golden import (
     GOLDEN_CLOSED,
+    GOLDEN_FAILED,
     GOLDEN_OK,
     GOLDEN_OK_EXPECTED,
     GOLDEN_WRONG_ARITY,
 )
-from airflow_scraping_etl_tutorial_spark.sources.twse import payloads_to_df
+from airflow_scraping_etl_tutorial_spark.sources.twse import PAYLOAD_SCHEMA, payloads_to_df
+
+GOLDEN_PAYLOADS = [GOLDEN_OK, GOLDEN_CLOSED, GOLDEN_WRONG_ARITY, GOLDEN_FAILED]
+
+
+def test_payloads_to_df_is_a_local_relation(spark):
+    """The payload frame lives in the JVM: its optimized plan is a
+    LocalRelation, not an RDD that every action re-serializes through
+    Python worker tasks."""
+    plan = payloads_to_df(spark, GOLDEN_PAYLOADS)._jdf.queryExecution().optimizedPlan()
+    assert "LocalRelation" in plan.toString()
+    assert "LogicalRDD" not in plan.toString()
+
+
+@pytest.mark.parametrize("payload", GOLDEN_PAYLOADS, ids=["ok", "closed", "wrong_arity", "failed"])
+def test_payloads_to_df_matches_row_path(spark, payload):
+    """The Arrow path yields the same rows as createDataFrame over
+    Python tuples (the RDD path it replaced), including the all-null
+    failed-fetch payload."""
+    row_path = spark.createDataFrame(
+        [tuple(payload.get(f.name) for f in PAYLOAD_SCHEMA.fields)], PAYLOAD_SCHEMA
+    ).collect()
+    assert payloads_to_df(spark, [payload]).collect() == row_path
 
 
 def test_clean_long_golden(spark):
@@ -86,6 +109,44 @@ def test_idempotent_daily_load(spark, tmp_path):
     assert read_sink(spark, sink).count() == 1
     assert read_sink(spark, sink, dt="20220819").count() == 1
     assert dict(read_sink(spark, sink).dtypes)["dt"] == "string"
+
+
+def test_read_sink_reads_one_partition(spark, tmp_path):
+    """A single-day read touches only that day's directory, with the
+    string dt and the column order of a whole-sink read; a day with no
+    partition reads as an empty frame."""
+    sink = str(tmp_path / "sink")
+    shifted = {**GOLDEN_OK, "date": "20220818"}
+    run_daily_load(spark, payloads_to_df(spark, [GOLDEN_OK, shifted]), sink)
+    day = read_sink(spark, sink, dt="20220819")
+    files = day.inputFiles()
+    assert files and all("/dt=20220819/" in f for f in files)
+    assert day.columns == read_sink(spark, sink).columns == [*SINK_COLUMNS[1:], "dt"]
+    assert dict(day.dtypes)["dt"] == "string"
+    row = day.collect()[0].asDict()
+    assert {k: str(v) for k, v in row.items()} == {
+        k: str(v) for k, v in GOLDEN_OK_EXPECTED.items()
+    }
+    missing = read_sink(spark, sink, dt="20220820")
+    assert missing.count() == 0
+    assert missing.schema == day.schema
+
+
+def test_failed_fetch_routes_to_alert(spark, tmp_path):
+    """A payload with a null stat is a failed fetch: it alerts with its
+    date, where a closed day is a no-op; the good day of the same run
+    still loads."""
+    sink = str(tmp_path / "sink")
+    msgs = []
+    res = run_daily_load(spark, payloads_to_df(spark, [GOLDEN_FAILED]), sink, notify=msgs.append)
+    assert (res.route, res.days_loaded, res.alerts) == ("alert", 0, ["20220822"])
+    assert res.failed_fetches == ["20220822"]
+    assert any("20220822" in m for m in msgs)
+
+    payloads = payloads_to_df(spark, [GOLDEN_OK, GOLDEN_CLOSED, GOLDEN_FAILED])
+    res = run_daily_load(spark, payloads, sink)
+    assert (res.route, res.days_loaded, res.alerts) == ("alert", 1, ["20220822"])
+    assert [r.dt for r in read_sink(spark, sink).collect()] == ["20220819"]
 
 
 def test_validate_flags_bad_dif(spark):
